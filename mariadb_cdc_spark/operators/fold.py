@@ -303,7 +303,7 @@ def _reset_patch_fold(
         # net image: the image is definitive on its own (absent = NULL),
         # independent of prior table state. Patch-only histories are NOT
         # anchored — their image only overrides the columns it carries.
-        # LakeTable._merge_delta appends anchored rows without reading
+        # LakeTable._delta_frame appends anchored rows without reading
         # table state (the Hudi-MOR insert path); only unanchored rows
         # need the resolve join.
         F.col("_reset_pos").isNotNull().alias("anchored"),

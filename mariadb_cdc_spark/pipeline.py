@@ -437,19 +437,9 @@ def apply_batch(
             meta["committed"][stream_id] = max(
                 meta["committed"].get(stream_id, -1), batch_id
             )
-        merged_maps = {
-            (m["server_id"], m["table_id"]): m
-            for m in meta.get("table_maps", [])
-        }
-        for m in batch_maps:
-            key = (m["server_id"], m["table_id"])
-            cur = merged_maps.get(key)
-            if cur is None or (m["binlog_file"], m["binlog_pos"]) >= (
-                cur["binlog_file"],
-                cur["binlog_pos"],
-            ):
-                merged_maps[key] = m
-        meta["table_maps"] = [merged_maps[k] for k in sorted(merged_maps)]
+        meta["table_maps"] = _latest_per_table(
+            meta.get("table_maps", []) + batch_maps
+        )
         if liveness is not None:
             meta["liveness"] = liveness
 
@@ -587,19 +577,9 @@ def apply_batch_multi(
                 meta["committed"][stream_id] = max(
                     meta["committed"].get(stream_id, -1), batch_id
                 )
-            merged_maps = {
-                (m["server_id"], m["table_id"]): m
-                for m in meta.get("table_maps", [])
-            }
-            for m in maps:
-                key = (m["server_id"], m["table_id"])
-                cur = merged_maps.get(key)
-                if cur is None or (m["binlog_file"], m["binlog_pos"]) >= (
-                    cur["binlog_file"],
-                    cur["binlog_pos"],
-                ):
-                    merged_maps[key] = m
-            meta["table_maps"] = [merged_maps[k] for k in sorted(merged_maps)]
+            meta["table_maps"] = _latest_per_table(
+                meta.get("table_maps", []) + maps
+            )
 
         lake.update_metadata(_multi_commit)
         results[(db, tbl)] = res
@@ -647,8 +627,9 @@ def apply_batch_auto(
     user code), so any deployment with composite keys passes `keys_for`.
 
     Provisioned schemas are all-string (the engine's late-typed image
-    convention); `LakeTable.merge(cast_types=...)` or downstream views
-    type them. Discovery is a control-plane scan: O(tables) rows collect.
+    convention); `LakeTable.widen_column` or downstream views type them
+    (merge casts image values to each column's type). Discovery is a
+    control-plane scan: O(tables) rows collect.
     """
     disc_rows = (
         events.where(F.col("event_type") == EVT_TABLE_MAP)
@@ -800,15 +781,23 @@ def _latest_maps(table_maps: DataFrame) -> list[dict]:
     `table_maps` is the local relation built by _load_registry, so this is
     a driver-side fold over already-collected control rows — no Spark job.
     """
+    return _latest_per_table(
+        {c: r[c] for c in _REGISTRY_COLS} for r in table_maps.collect()
+    )
+
+
+def _latest_per_table(maps) -> list[dict]:
+    """Keep the TABLE_MAP with the latest (binlog_file, binlog_pos) per
+    (server_id, table_id); on a tie the later entry wins. Sorted by key."""
     latest: dict[tuple, dict] = {}
-    for r in table_maps.collect():
-        key = (r["server_id"], r["table_id"])
+    for m in maps:
+        key = (m["server_id"], m["table_id"])
         cur = latest.get(key)
-        if cur is None or (r["binlog_file"], r["binlog_pos"]) >= (
+        if cur is None or (m["binlog_file"], m["binlog_pos"]) >= (
             cur["binlog_file"],
             cur["binlog_pos"],
         ):
-            latest[key] = {c: r[c] for c in _REGISTRY_COLS}
+            latest[key] = m
     return [latest[k] for k in sorted(latest)]
 
 

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import copy
 import fcntl
+import functools
 import json
 import os
 import shutil
@@ -56,6 +57,34 @@ from mariadb_cdc_spark.sources import zorder
 
 def _bucket_col(keys: list[str], n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
+
+
+def _live_buckets(meta: dict) -> list[int]:
+    """Buckets holding data in snapshot `meta`: a base relation or a
+    non-empty delta list."""
+    return sorted(
+        {int(b) for b in meta["buckets"]}
+        | {int(b) for b, rels in meta.get("deltas", {}).items() if rels}
+    )
+
+
+def _bucket_rels(meta: dict, bucket: int) -> list[str]:
+    """A bucket's data relations: its base (if any), then its deltas."""
+    sb = str(bucket)
+    rels = [meta["buckets"][sb]] if meta["buckets"].get(sb) else []
+    return rels + meta.get("deltas", {}).get(sb, [])
+
+
+def _max_lineage(into: dict, lineage: dict) -> None:
+    """Merge per-server binlog positions into `into`, keeping the later
+    (file, pos) of each server_id."""
+    for sid, pos in lineage.items():
+        cur = into.get(str(sid))
+        if cur is None or (pos["file"], pos["pos"]) >= (
+            cur["file"],
+            cur["pos"],
+        ):
+            into[str(sid)] = pos
 
 
 class CommitConflict(Exception):
@@ -133,13 +162,7 @@ def _rebase(ours: dict, base: dict, latest: dict, affected: list[int]) -> dict:
     file_stats.gc_stats(out)
     for sid, bid in ours.get("committed", {}).items():
         out["committed"][sid] = max(out["committed"].get(sid, -1), bid)
-    for sid, pos in ours.get("lineage", {}).items():
-        cur = out["lineage"].get(sid)
-        if cur is None or (pos["file"], pos["pos"]) >= (
-            cur["file"],
-            cur["pos"],
-        ):
-            out["lineage"][sid] = pos
+    _max_lineage(out["lineage"], ours.get("lineage", {}))
     have = {n for n, _ in out["schema"]}
     for n, s in ours["schema"]:
         if n not in have:
@@ -226,24 +249,7 @@ class LakeTable:
             "ts": time.time(),
         }
         if initial is not None:
-            data_rel = "data/v0"
-            (
-                initial.withColumn("_bucket", _bucket_col(keys, n_buckets))
-                .repartition(n_buckets, "_bucket")
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(os.path.join(t.path, data_rel))
-            )
-            meta["buckets"] = {
-                str(b): data_rel for b in t._present_buckets(data_rel)
-            }
-            meta["stats"][data_rel] = file_stats.collect_rel_stats(
-                spark, t.path, data_rel
-            )
-            file_stats.attach_blooms(
-                spark, t.path, data_rel, keys, meta["stats"][data_rel],
-                level="base",
-            )
+            t._write_rel(meta, initial, range(n_buckets))
             meta["metrics"]["n_rows"] = initial.count()
         t._write_metadata(meta)
         return t
@@ -586,11 +592,7 @@ class LakeTable:
                 raise ValueError("pass version or tag, not both")
             version = self.resolve_tag(tag)
         meta = self.metadata(version)
-        buckets = sorted(
-            {int(b) for b in meta["buckets"]}
-            | {int(b) for b, rels in meta.get("deltas", {}).items() if rels}
-        )
-        df = self._read_state(meta, buckets)
+        df = self._read_state(meta, _live_buckets(meta))
         return df.where(~F.coalesce(F.col(CDC_DELETED), F.lit(False))).select(
             *[n for n, _ in meta["schema"]]
         )
@@ -685,10 +687,7 @@ class LakeTable:
                     _bucket_col(keys, n_buckets).alias("b")
                 ).distinct().collect()
             }
-        present = {int(b) for b in meta["buckets"]} | {
-            int(b) for b, rels in meta.get("deltas", {}).items() if rels
-        }
-        live = sorted(hit & present)
+        live = sorted(hit & set(_live_buckets(meta)))
         if pairs is not None:
             # exact-key file skipping: recorded min/max bounds + per-file
             # key blooms; sound in dirty buckets (stats.prune_point)
@@ -712,10 +711,7 @@ class LakeTable:
         bad = sorted({c for c, _, _ in filters} - schema_cols)
         if bad:
             raise ValueError(f"unknown filter columns: {bad}")
-        live = sorted(
-            {int(b) for b in meta["buckets"]}
-            | {int(b) for b, r in meta.get("deltas", {}).items() if r}
-        )
+        live = _live_buckets(meta)
         return meta, filters, live, file_stats.prune(meta, live, filters)
 
     def read_where(
@@ -739,38 +735,9 @@ class LakeTable:
         non-matching version, so per-file pruning inside such buckets
         would be unsound (stats.py module docstring)."""
         meta, filters, _, plan = self._plan_where(filters, version)
-        logical = list(meta["schema"]) + _INTERNAL
-        deltas = meta.get("deltas", {})
-        clean_paths: list[str] = []
-        dirty_buckets: list[int] = []
-        for b, entry in plan.items():
-            if deltas.get(str(b)):
-                dirty_buckets.append(b)
-                continue
-            for rel, names in entry["rel_files"].items():
-                d = os.path.join(self.path, rel, f"_bucket={b}")
-                if names is None:
-                    clean_paths.append(d)
-                else:
-                    clean_paths.extend(os.path.join(d, f) for f in names)
-        parts: list[DataFrame] = []
-        if clean_paths:
-            parts.append(
-                file_stats.residual_filter(
-                    self._aligned_scan(clean_paths, logical), filters
-                )
-            )
-        if dirty_buckets:
-            parts.append(
-                file_stats.residual_filter(
-                    self._read_state(meta, sorted(dirty_buckets)), filters
-                )
-            )
-        if not parts:
-            parts = [self._read_buckets(meta, [], internal=True)]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = file_stats.residual_filter(
+            self._read_state_plan(meta, plan), filters
+        )
         return out.where(
             ~F.coalesce(F.col(CDC_DELETED), F.lit(False))
         ).select(*[n for n, _ in meta["schema"]])
@@ -782,19 +749,11 @@ class LakeTable:
         companion (files and bytes from the recorded stats; relations
         without stats count as fully scanned)."""
         meta, filters, live, plan = self._plan_where(filters, version)
-        deltas = meta.get("deltas", {})
         stats = meta.get("stats", {})
-
-        def rel_files(rel: str, sb: str) -> dict:
-            return stats.get(rel, {}).get(sb, {})
-
         tot_f = tot_b = scan_f = scan_b = 0
         for b in live:
-            sb = str(b)
-            rels = ([meta["buckets"][sb]] if meta["buckets"].get(sb) else [])
-            rels += deltas.get(sb, [])
-            for rel in rels:
-                fmap = rel_files(rel, sb)
+            for rel in _bucket_rels(meta, b):
+                fmap = stats.get(rel, {}).get(str(b), {})
                 tot_f += len(fmap)
                 tot_b += sum(e["size"] for e in fmap.values())
                 entry = plan.get(b)
@@ -858,19 +817,12 @@ class LakeTable:
                 tuple(meta.get("deltas", {}).get(str(b), [])),
             )
 
-        every = (
-            {int(b) for b in m0["buckets"]}
-            | {int(b) for b in m1["buckets"]}
-            | {int(b) for b, r in m0.get("deltas", {}).items() if r}
-            | {int(b) for b, r in m1.get("deltas", {}).items() if r}
-        )
+        every = set(_live_buckets(m0)) | set(_live_buckets(m1))
         touched = sorted(b for b in every if _sig(m0, b) != _sig(m1, b))
 
         def _live(meta):
-            present = {int(b) for b in meta["buckets"]} | {
-                int(b) for b, r in meta.get("deltas", {}).items() if r
-            }
-            df = self._read_state(meta, sorted(set(touched) & present))
+            # a touched bucket empty on this side drops out of the plan
+            df = self._read_state(meta, touched)
             df = df.where(~F.coalesce(F.col(CDC_DELETED), F.lit(False)))
             return df.select(
                 *[
@@ -918,42 +870,28 @@ class LakeTable:
 
     def _read_state(self, meta: dict, buckets: list[int]) -> DataFrame:
         """base ∪ deltas for `buckets` with per-key LATEST-position
-        resolution — but ONLY delta-carrying buckets pay the resolution
-        shuffle; delta-free buckets stream through untouched."""
-        deltas = meta.get("deltas", {})
-        plain = [b for b in buckets if not deltas.get(str(b))]
-        dirty = [b for b in buckets if deltas.get(str(b))]
-        parts = []
-        if plain:
-            parts.append(self._read_buckets(meta, plain, internal=True))
-        if dirty:
-            stack = self._read_buckets(meta, dirty, internal=True)
-            logical = list(meta["schema"]) + _INTERNAL
-            for b in dirty:
-                for rel in deltas[str(b)]:
-                    stack = stack.unionByName(
-                        self._aligned_scan(
-                            [os.path.join(self.path, rel, f"_bucket={b}")],
-                            logical,
-                        )
-                    )
-            parts.append(_latest_per_key(stack, meta["keys"]))
-        if not parts:
-            return self._read_buckets(meta, [], internal=True)  # typed empty
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        resolution: the whole-bucket scan plan through _read_state_plan."""
+        return self._read_state_plan(
+            meta,
+            {
+                b: {"rel_files": dict.fromkeys(_bucket_rels(meta, b))}
+                for b in buckets
+            },
+        )
 
     def _read_state_plan(self, meta: dict, plan: dict) -> DataFrame:
-        """_read_state over an explicit FILE-level scan plan
-        ({bucket: {"rel_files": {rel: [filename] | None}}}, the
-        stats.prune_point shape). Only valid for exact-key reads: inside a
-        dirty bucket the plan may legitimately drop files, which is sound
-        there only because the caller semi-joins to the wanted keys and
-        no file containing a wanted key is ever dropped (stats.py bloom
-        soundness note). Per-rel aligned scans (schema may differ across
-        relations), one latest-per-key resolution over all dirty rows."""
+        """Table state for a FILE-level scan plan
+        ({bucket: {"rel_files": {rel: [filename] | None}}}, None = the
+        bucket's whole dir; the stats.prune / prune_point shape). One
+        aligned scan per data relation (schemas may differ across
+        relations); ONLY delta-carrying buckets pay the latest-per-key
+        resolution shuffle, delta-free buckets stream through untouched.
+
+        Whole-bucket plans (_read_state) and prune() plans keep every
+        dirty bucket whole. Only exact-key plans (prune_point) drop files
+        inside a dirty bucket, which is sound there only because the
+        caller semi-joins to the wanted keys and no file containing a
+        wanted key is ever dropped (stats.py bloom soundness note)."""
         deltas = meta.get("deltas", {})
         logical = list(meta["schema"]) + _INTERNAL
         plain_by_rel: dict[str, list[str]] = {}
@@ -967,24 +905,26 @@ class LakeTable:
                     if names is None
                     else [os.path.join(d, f) for f in names]
                 )
-        parts: list[DataFrame] = []
-        for paths in plain_by_rel.values():
-            parts.append(self._aligned_scan(paths, logical))
-        dirty_parts = [
+        parts = [
             self._aligned_scan(paths, logical)
-            for paths in dirty_by_rel.values()
+            for paths in plain_by_rel.values()
         ]
-        if dirty_parts:
-            stack = dirty_parts[0]
-            for p in dirty_parts[1:]:
-                stack = stack.unionByName(p)
+        if dirty_by_rel:
+            stack = _union(
+                [
+                    self._aligned_scan(paths, logical)
+                    for paths in dirty_by_rel.values()
+                ]
+            )
             parts.append(_latest_per_key(stack, meta["keys"]))
-        if not parts:
-            return self._read_buckets(meta, [], internal=True)  # typed empty
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        if not parts:  # typed empty
+            return self.spark.createDataFrame(
+                [],
+                T.StructType(
+                    [T.StructField(n, _parse_type(s)) for n, s in logical]
+                ),
+            )
+        return _union(parts)
 
     def point_plan(
         self, key_rows: dict | list[dict], version: int | None = None
@@ -1016,21 +956,15 @@ class LakeTable:
             if all(None not in v for v in vals.values())
             else []
         )
-        present = {int(b) for b in meta["buckets"]} | {
-            int(b) for b, rels in meta.get("deltas", {}).items() if rels
-        }
-        hit = sorted({int(r["b"]) for r in sel} & present)
+        present = _live_buckets(meta)
+        hit = sorted({int(r["b"]) for r in sel} & set(present))
         plan = file_stats.prune_point(meta, hit, key_filters, pairs)
         stats = meta.get("stats", {})
-        deltas = meta.get("deltas", {})
         tot_f = tot_b = scan_f = scan_b = 0
-        for b in sorted(present):
-            sb = str(b)
-            rels = ([meta["buckets"][sb]] if meta["buckets"].get(sb) else [])
-            rels += deltas.get(sb, [])
+        for b in present:
             entry = plan.get(b)
-            for rel in rels:
-                fmap = stats.get(rel, {}).get(sb, {})
+            for rel in _bucket_rels(meta, b):
+                fmap = stats.get(rel, {}).get(str(b), {})
                 tot_f += len(fmap)
                 tot_b += sum(e["size"] for e in fmap.values())
                 if entry is None:
@@ -1061,7 +995,6 @@ class LakeTable:
         stream_id: str = "default",
         batch_id: int | None = None,
         lineage: dict | None = None,
-        cast_types: bool = True,
         max_commit_retries: int = 10,
     ) -> dict:
         """MERGE with optimistic concurrency (Iceberg commit semantics).
@@ -1094,7 +1027,6 @@ class LakeTable:
                     stream_id=stream_id,
                     batch_id=batch_id,
                     lineage=lineage,
-                    cast_types=cast_types,
                 )
             except CommitConflict as e:
                 last = e
@@ -1107,7 +1039,6 @@ class LakeTable:
         stream_id: str = "default",
         batch_id: int | None = None,
         lineage: dict | None = None,
-        cast_types: bool = True,
     ) -> dict:
         """MERGE the folded change set into the table (single attempt).
 
@@ -1118,22 +1049,30 @@ class LakeTable:
           WHEN MATCHED THEN UPDATE SET col = coalesce(image[col], t.col)
           WHEN NOT MATCHED AND final_op!='DELETE' THEN INSERT (image cols)
         The per-column coalesce implements binlog_row_image=minimal partial
-        updates (reference README.md:200-235).
+        updates (reference README.md:200-235). Image values are cast to the
+        columns' logical types.
+
+        Three steps: _plan_merge splits the affected buckets into a
+        copy-on-write set and a delta set, _write_rel writes one data
+        relation per non-empty set, _commit_merge commits both under one
+        CAS swap. The result's `mode` names the plan (fast | delta |
+        hybrid | cow).
 
         Exactly-once: if (stream_id, batch_id) was already committed the call
         is a no-op and returns the recorded metrics.
         """
         meta = self.metadata()
-        keys, n_buckets = meta["keys"], meta["n_buckets"]
+        keys = meta["keys"]
         if batch_id is not None:
             done = meta["committed"].get(stream_id, -1)
             if batch_id <= done:
                 return {"skipped": True, "version": meta["version"]}
 
         # Immutable base snapshot for conflict detection/rebase — `meta` is
-        # mutated in place from here on (hot keys, schema adds, pointers).
+        # mutated in place from here on (schema adds, pointers) and becomes
+        # the next version, which names the relations this attempt writes.
         base_meta = copy.deepcopy(meta)
-        version = meta["version"] + 1
+        meta["version"] += 1
         floor = meta.get("position_floor")
         if floor:
             # Data-reset floor (TRUNCATE): changes at or below the
@@ -1145,28 +1084,25 @@ class LakeTable:
                     F.lit(int(floor["pos"])).alias("last_pos"),
                 )
             )
-        u = folded.withColumn("_bucket", _bucket_col(keys, n_buckets)).persist()
+        u = folded.withColumn(
+            "_bucket", _bucket_col(keys, meta["n_buckets"])
+        ).persist()
 
         # One pass over the (small, one-row-per-key) folded set collects both
         # the affected buckets and the observed image columns; the persist
         # keeps the fold from recomputing for the join below.
         # `anchored` (when the fold provides it) marks rows whose image is
-        # definitive without prior state; unanchored (patch-only) rows and
-        # their buckets are counted so the delta path can scope — or skip —
-        # its table-state read.
+        # definitive without prior state; the buckets of unanchored
+        # (patch-only) rows are collected so the delta path can scope — or
+        # skip — its table-state read.
         has_anchor = "anchored" in u.columns
-        unanchored_cond = (
-            (~F.col("anchored")) & (F.col("final_op") != F.lit("DELETE"))
-            if has_anchor
-            else F.lit(True)
-        )
+        unanchored_cond = _unanchored() if has_anchor else F.lit(True)
         stats = u.agg(
             F.collect_set("_bucket").alias("bks"),
             F.count(F.lit(1)).alias("n"),
             F.array_distinct(
                 F.flatten(F.collect_set(F.map_keys(F.col("image"))))
             ).alias("cols"),
-            F.sum(F.when(unanchored_cond, 1).otherwise(0)).alias("n_unanch"),
             F.collect_set(F.when(unanchored_cond, F.col("_bucket"))).alias(
                 "unanch_bks"
             ),
@@ -1186,121 +1122,212 @@ class LakeTable:
         ).collect()[0]
         affected = sorted(stats["bks"])
         n_upserts = int(stats["n"])
-        n_unanchored = int(stats["n_unanch"] or 0) if has_anchor else None
-        unanchored_buckets = (
+        unanchored = (
             sorted(b for b in stats["unanch_bks"] if b is not None)
             if has_anchor
             else None
         )
-        meta["hot_keys"] = [[r[k] for k in keys] for r in stats["hot"]]
-        deltas = meta.setdefault("deltas", {})
-        dbytes = meta.setdefault("delta_bytes", {})
-
-        if n_upserts == 0:
-            # Empty epoch (idle stream / heartbeat-only batch): commit the
-            # exactly-once marker and lineage METADATA-ONLY — no empty data
-            # dir per idle trigger interval, which at a 1s trigger would
-            # otherwise mint 86k junk commits a day for retention to chase.
-            u.unpersist()
-            if batch_id is not None:
-                meta["committed"][stream_id] = batch_id
-            if lineage:
-                for sid, posinfo in lineage.items():
-                    cur = meta["lineage"].get(str(sid))
-                    if cur is None or (posinfo["file"], posinfo["pos"]) >= (
-                        cur["file"],
-                        cur["pos"],
-                    ):
-                        meta["lineage"][str(sid)] = posinfo
-            # affected=[] -> any concurrent winner rebases cleanly; an
-            # idle-stream heartbeat commit can never fail on contention.
-            version = self._commit_optimistic(meta, base_meta, [], [])
-            return {"skipped": False, "version": version, "buckets": 0}
 
         # schema evolution: image keys not yet in the schema become new
         # string columns (metadata-only; DDL-driven typed evolution goes
         # through add_column/rename_column/widen_column).
         known = {n for n, _ in meta["schema"]}
-        for c in sorted(set(stats["cols"]) - known):
+        for c in sorted(set(stats["cols"] or []) - known):
             meta["schema"].append([c, "string"])
-        logical = meta["schema"]
 
-        if not any(
-            str(b) in meta["buckets"] or deltas.get(str(b)) for b in affected
-        ):
-            # Fast path: no affected bucket has any existing data (initial
-            # load, or a batch touching only brand-new key space). The
-            # full-outer join against an empty target is the identity on the
-            # update side — build rows straight from the fold, skipping the
-            # join's shuffle+sort of the whole change set entirely.
-            merged = self._rows_from_fold(u, logical, keys, cast_types)
-            return self._commit_merged(
-                merged, meta, affected, version, u,
-                stream_id=stream_id, batch_id=batch_id, lineage=lineage,
-                n_upserts=n_upserts, base_meta=base_meta,
+        mode, cow, delta = self._plan_merge(meta, affected, n_upserts)
+        u_cow = u_delta = u
+        if cow and delta:  # hybrid: each side merges only its buckets' rows
+            in_cow = F.col("_bucket").isin(cow)
+            u_cow, u_delta = u.where(in_cow), u.where(~in_cow)
+        # An empty set writes nothing: an empty epoch (idle stream /
+        # heartbeat-only batch) commits its marker and lineage
+        # METADATA-ONLY — no empty data dir per idle trigger interval,
+        # which at a 1s trigger would otherwise mint 86k junk commits a day
+        # for retention to chase.
+        new_rels = []
+        if cow:
+            frame = (
+                self._rows_from_fold(u_cow, meta)
+                if mode == "fast"
+                else self._cow_frame(u_cow, meta, cow)
             )
-        # MOR vs COW: small batches append per-bucket delta files (bytes ~
-        # batch size); large batches, and buckets whose deltas crossed the
-        # compaction threshold, take the copy-on-write rewrite (which folds
-        # the deltas back in and clears them).
-        need_compact = any(
-            len(deltas.get(str(b), [])) >= self.MAX_DELTA_FILES
+            new_rels.append(self._write_rel(meta, frame, cow))
+        if delta:
+            frame = self._delta_frame(
+                u_delta,
+                meta,
+                delta,
+                None
+                if unanchored is None
+                else [b for b in unanchored if b not in cow],
+            )
+            new_rels.append(self._write_rel(meta, frame, delta, delta=True))
+        u.unpersist()
+
+        version = self._commit_merge(
+            meta, base_meta, affected, new_rels,
+            stream_id=stream_id, batch_id=batch_id, lineage=lineage,
+            n_upserts=n_upserts,
+            hot_keys=[[r[k] for k in keys] for r in stats["hot"]],
+        )
+        base_deltas = base_meta.get("deltas", {})
+        return {
+            "skipped": False,
+            "version": version,
+            "buckets": len(affected),
+            "mode": mode,
+            "compacted_buckets": sum(1 for b in cow if base_deltas.get(str(b))),
+        }
+
+    def _plan_merge(
+        self, meta: dict, affected: list[int], n_upserts: int
+    ) -> tuple[str, list[int], list[int]]:
+        """(mode, copy-on-write buckets, delta buckets) for a merge.
+
+        - fast: no affected bucket holds data (initial load, a batch
+          touching only brand-new key space, or an empty epoch). Every
+          bucket is COW and its rows come straight from the fold: the
+          full-outer join against an empty target is the identity on the
+          update side, so the join's shuffle+sort is skipped entirely.
+        - cow: the batch upserts more than MOR_MAX_ROW_FRACTION of the
+          table's rows — at that size the rewrite is the cheaper plan.
+        - delta: small batches append per-bucket delta files (bytes ~
+          batch size).
+        - hybrid: PARTIAL compaction. Only the buckets whose delta debt
+          crossed the threshold (MAX_DELTA_FILES, or delta bytes above
+          COMPACT_BYTES_FRACTION of the base) take the COW rewrite, which
+          folds their deltas back in; every other affected bucket keeps
+          the O(batch) delta append. Without this split ONE hot bucket's
+          debt flips the WHOLE batch to copy-on-write — at production skew
+          that is the difference between rewriting a bucket and rewriting
+          the table. When every affected bucket is due, the plan is cow.
+        """
+        if not any(_bucket_rels(meta, b) for b in affected):
+            return "fast", affected, []
+        if n_upserts > self.MOR_MAX_ROW_FRACTION * max(
+            meta["metrics"].get("n_rows") or 0, 1
+        ):
+            return "cow", affected, []
+        deltas = meta.get("deltas", {})
+        dbytes = meta.get("delta_bytes", {})
+        due = [
+            b for b in affected
+            if len(deltas.get(str(b), [])) >= self.MAX_DELTA_FILES
             or dbytes.get(str(b), 0)
             > self.COMPACT_BYTES_FRACTION * max(self._base_bytes(meta, b), 1)
-            for b in affected
-        )
-        big = n_upserts > self.MOR_MAX_ROW_FRACTION * max(
-            meta["metrics"].get("n_rows") or 0, 1
-        )
-        if not (need_compact or big):
-            return self._merge_delta(
-                u, meta, affected, version, n_upserts,
-                stream_id=stream_id, batch_id=batch_id, lineage=lineage,
-                cast_types=cast_types, base_meta=base_meta,
-                n_unanchored=n_unanchored,
-                unanchored_buckets=unanchored_buckets,
-            )
+        ]
+        rest = [b for b in affected if b not in due]
+        if not due:
+            return "delta", [], affected
+        if not rest:
+            return "cow", affected, []
+        return "hybrid", due, rest
 
-        if need_compact and not big:
-            # PARTIAL compaction: only the buckets whose delta debt crossed
-            # the threshold take the COW rewrite; every other affected
-            # bucket keeps the O(batch) delta append. Without this split,
-            # ONE hot bucket's debt flips the WHOLE batch to copy-on-write
-            # — at production skew (a few hot tables among thousands of
-            # buckets) that is the difference between rewriting a bucket
-            # and rewriting the table. Both writes land under one CAS
-            # commit, so readers never see a half-applied batch.
-            compact_due = [
-                b for b in affected
-                if len(deltas.get(str(b), [])) >= self.MAX_DELTA_FILES
-                or dbytes.get(str(b), 0)
-                > self.COMPACT_BYTES_FRACTION * max(self._base_bytes(meta, b), 1)
-            ]
-            if compact_due and len(compact_due) < len(affected):
-                return self._merge_hybrid(
-                    u, meta, affected, compact_due, version, n_upserts,
-                    stream_id=stream_id, batch_id=batch_id, lineage=lineage,
-                    cast_types=cast_types, base_meta=base_meta,
-                    n_unanchored=n_unanchored,
-                    unanchored_buckets=unanchored_buckets,
+    def _write_rel(
+        self,
+        meta: dict,
+        frame: DataFrame,
+        buckets: list[int] | range,
+        *,
+        delta: bool = False,
+        cluster: list | None = None,
+        max_records: int = 0,
+    ) -> str:
+        """Write `frame` as ONE new data relation over `buckets` and
+        register it in `meta`; returns its name.
+
+        A base relation (data/v…) replaces the base of every bucket in
+        `buckets` and drops its deltas (a COW rewrite folds them in); a
+        bucket the frame left empty leaves the bucket map (parquet
+        partitionBy skips empty partitions — never map a bucket to a
+        missing dir). A delta relation (data/d…) appends to the delta list
+        and delta-byte debt of each bucket it wrote. File stats (and
+        blooms) are recorded for the new relation and dropped for
+        relations `meta` no longer references.
+
+        The name is unique per attempt: concurrent writers (and
+        conflict-retried attempts) must never collide on a data path
+        before the CAS decides the winner. `cluster` sorts rows within each
+        bucket and `max_records` caps rows per file (_rewrite's layout)."""
+        keys, n_buckets = meta["keys"], meta["n_buckets"]
+        kind = "d" if delta else "v"
+        rel = f"data/{kind}{meta['version']}-{uuid.uuid4().hex[:8]}"
+        df = frame.withColumn(
+            "_bucket", _bucket_col(keys, n_buckets)
+        ).repartition(max(len(buckets), 1), "_bucket")
+        if cluster:
+            df = df.sortWithinPartitions("_bucket", *cluster)
+        writer = df.write.mode("overwrite")
+        if max_records:
+            writer = writer.option("maxRecordsPerFile", max_records)
+        writer.partitionBy("_bucket").parquet(os.path.join(self.path, rel))
+
+        written = set(self._present_buckets(rel))
+        deltas = meta.setdefault("deltas", {})
+        dbytes = meta.setdefault("delta_bytes", {})
+        if delta:
+            for b in sorted(written):
+                sb = str(b)
+                deltas.setdefault(sb, []).append(rel)
+                dbytes[sb] = dbytes.get(sb, 0) + _dir_bytes(
+                    os.path.join(self.path, rel, f"_bucket={b}")
                 )
+        else:
+            for b in buckets:
+                sb = str(b)
+                if b in written:
+                    meta["buckets"][sb] = rel
+                else:
+                    meta["buckets"].pop(sb, None)
+                deltas.pop(sb, None)
+                dbytes.pop(sb, None)
+        if written:
+            rel_stats = file_stats.collect_rel_stats(
+                self.spark, self.path, rel
+            )
+            meta.setdefault("stats", {})[rel] = rel_stats
+            file_stats.attach_blooms(
+                self.spark, self.path, rel, keys, rel_stats,
+                level="delta" if delta else "base",
+            )
+        file_stats.gc_stats(meta)
+        return rel
 
-        merged = self._cow_frame(u, meta, affected, cast_types)
-        return self._commit_merged(
-            merged, meta, affected, version, u,
-            stream_id=stream_id, batch_id=batch_id, lineage=lineage,
-            n_upserts=n_upserts, base_meta=base_meta,
+    def _commit_merge(
+        self,
+        meta: dict,
+        base_meta: dict,
+        affected: list[int],
+        new_rels: list[str],
+        *,
+        stream_id: str,
+        batch_id: int | None,
+        lineage: dict | None,
+        n_upserts: int,
+        hot_keys: list,
+    ) -> int:
+        """Record the exactly-once marker, lineage, row estimate and hot
+        keys in `meta`, then CAS-commit it (_commit_optimistic). With no
+        affected bucket any concurrent winner rebases cleanly, so an
+        idle-stream heartbeat commit can never fail on contention."""
+        if batch_id is not None:
+            meta["committed"][stream_id] = batch_id
+        _max_lineage(meta["lineage"], lineage or {})
+        # Upper-bound row estimate feeding the MOR/COW decision only (an
+        # overestimate biases toward deltas, which compaction bounds).
+        meta["metrics"]["n_rows"] = (
+            meta["metrics"].get("n_rows", 0) + n_upserts
         )
+        meta["hot_keys"] = hot_keys
+        return self._commit_optimistic(meta, base_meta, affected, new_rels)
 
     def _cow_frame(
-        self, u: DataFrame, meta: dict, buckets: list[int],
-        cast_types: bool = True,
+        self, u: DataFrame, meta: dict, buckets: list[int]
     ) -> DataFrame:
         """The copy-on-write MERGE frame for `buckets`: full-outer join of
         current state (bases + deltas resolved) against the folded change
-        set, position-gated per key. Extracted from the monolithic COW
-        path so partial compaction (_merge_hybrid) can rewrite a SUBSET of
-        the affected buckets with the identical semantics."""
+        set, position-gated per key."""
         keys = meta["keys"]
         logical = meta["schema"]
         target = self._read_state(meta, buckets)
@@ -1328,9 +1355,7 @@ class LakeTable:
         out_cols = []
         for n, st in logical:
             typ = _parse_type(st)
-            img_val = F.col("u.image").getItem(n)
-            if cast_types:
-                img_val = img_val.cast(typ)
+            img_val = F.col("u.image").getItem(n).cast(typ)
             tcol = F.col(f"t.{n}") if n in target.columns else F.lit(None).cast(typ)
             if n in keys:
                 out_cols.append(F.coalesce(tcol, F.col(f"u.{n}").cast(typ)).alias(n))
@@ -1369,28 +1394,23 @@ class LakeTable:
         )
         return joined.select(*out_cols)
 
-    def _rows_from_fold(
-        self, u: DataFrame, logical: list, keys: list[str], cast_types: bool
-    ) -> DataFrame:
+    def _rows_from_fold(self, u: DataFrame, meta: dict) -> DataFrame:
         """Build storage rows straight from folded upserts: image values
         aligned to the logical schema (absent = NULL — valid exactly when
         the image is definitive: empty target, or an anchored fold row),
         DELETEs as tombstones, position-gate columns attached."""
         out_cols = []
-        for n, st in logical:
+        for n, st in meta["schema"]:
             typ = _parse_type(st)
-            if cast_types and n in keys:
+            if n in meta["keys"]:
                 out_cols.append(F.col(f"u.{n}").cast(typ).alias(n))
-            elif n in keys:
-                out_cols.append(F.col(f"u.{n}").alias(n))
             else:
-                img_val = F.col("u.image").getItem(n)
                 out_cols.append(
                     F.when(
                         F.col("u.final_op") == F.lit("DELETE"),
                         F.lit(None).cast(typ),
                     )
-                    .otherwise(img_val.cast(typ) if cast_types else img_val)
+                    .otherwise(F.col("u.image").getItem(n).cast(typ))
                     .alias(n)
                 )
         out_cols.extend(
@@ -1402,104 +1422,6 @@ class LakeTable:
             ]
         )
         return u.alias("u").select(*out_cols)
-
-    def _commit_merged(
-        self,
-        merged: DataFrame,
-        meta: dict,
-        affected: list[int],
-        version: int,
-        u: DataFrame,
-        *,
-        stream_id: str,
-        batch_id: int | None,
-        lineage: dict | None,
-        n_upserts: int = 0,
-        base_meta: dict | None = None,
-    ) -> dict:
-        keys, n_buckets = meta["keys"], meta["n_buckets"]
-        # Unique dir per attempt: concurrent writers (and conflict-retried
-        # attempts) must never collide on a data path before the CAS decides
-        # the winner. Losers' dirs become orphans that expire_snapshots GCs.
-        data_rel = f"data/v{version}-{uuid.uuid4().hex[:8]}"
-        (
-            merged.withColumn("_bucket", _bucket_col(keys, n_buckets))
-            .repartition(max(len(affected), 1), "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(os.path.join(self.path, data_rel))
-        )
-        u.unpersist()
-
-        written = set(self._present_buckets(data_rel))
-        for b in affected:
-            if b in written:
-                meta["buckets"][str(b)] = data_rel
-            else:
-                meta["buckets"].pop(str(b), None)
-            # COW rewrite folded any deltas of this bucket into the new base
-            meta.setdefault("deltas", {}).pop(str(b), None)
-            meta.setdefault("delta_bytes", {}).pop(str(b), None)
-        if written:
-            meta.setdefault("stats", {})[data_rel] = (
-                file_stats.collect_rel_stats(self.spark, self.path, data_rel)
-            )
-            file_stats.attach_blooms(
-                self.spark, self.path, data_rel, keys,
-                meta["stats"][data_rel], level="base",
-            )
-        file_stats.gc_stats(meta)
-        if batch_id is not None:
-            meta["committed"][stream_id] = batch_id
-        if lineage:
-            for sid, posinfo in lineage.items():
-                cur = meta["lineage"].get(str(sid))
-                if cur is None or (posinfo["file"], posinfo["pos"]) >= (
-                    cur["file"],
-                    cur["pos"],
-                ):
-                    meta["lineage"][str(sid)] = posinfo
-        # Upper-bound row estimate feeding the MOR/COW decision only (an
-        # overestimate biases toward deltas, which compaction bounds).
-        meta["metrics"]["n_rows"] = (
-            meta["metrics"].get("n_rows", 0) + n_upserts
-        )
-        if base_meta is None:
-            meta["version"] = version
-            meta["ts"] = time.time()
-            self._write_metadata(meta)
-        else:
-            version = self._commit_optimistic(
-                meta, base_meta, affected, [data_rel]
-            )
-        return {"skipped": False, "version": version, "buckets": len(affected)}
-
-    def _read_buckets(
-        self, meta: dict, buckets: list[int], internal: bool = False
-    ) -> DataFrame:
-        logical = list(meta["schema"]) + (_INTERNAL if internal else [])
-        empty = self.spark.createDataFrame(
-            [],
-            T.StructType([T.StructField(n, _parse_type(s)) for n, s in logical]),
-        )
-        dirs: dict[str, list[int]] = {}
-        for b in buckets:
-            rel = meta["buckets"].get(str(b))
-            if rel:
-                dirs.setdefault(rel, []).append(b)
-        if not dirs:
-            return empty
-        parts = [
-            self._aligned_scan(
-                [os.path.join(self.path, rel, f"_bucket={b}") for b in bs],
-                logical,
-            )
-            for rel, bs in dirs.items()
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
 
     def _aligned_scan(self, paths: list[str], logical: list) -> DataFrame:
         """Scan parquet dirs aligned to the logical schema (missing columns
@@ -1703,17 +1625,11 @@ class LakeTable:
         nature, so the caller simply re-runs against the new state."""
         base_meta = self.metadata()
         meta = copy.deepcopy(base_meta)
-        version = meta["version"] + 1
-        buckets = sorted(
-            {int(b) for b in meta["buckets"]}
-            | {int(b) for b, rels in meta.get("deltas", {}).items() if rels}
-        )
-        df = fn(self._read_state(meta, buckets))
-        data_rel = f"data/v{version}-{uuid.uuid4().hex[:8]}"
+        meta["version"] += 1
+        df = fn(self._read_state(meta, _live_buckets(meta)))
         if new_n_buckets is not None:
             meta["n_buckets"] = int(new_n_buckets)
-        keys, n_buckets = meta["keys"], meta["n_buckets"]
-        df = df.withColumn("_bucket", _bucket_col(keys, n_buckets))
+        n_buckets = meta["n_buckets"]
         if sort_by and zorder_by:
             raise ValueError("pass sort_by OR zorder_by, not both")
         cluster: list = list(sort_by) if sort_by else []
@@ -1729,6 +1645,7 @@ class LakeTable:
                 row_estimate=max(meta["metrics"].get("n_rows", 0), 1),
             )
             cluster = [zorder.zorder_key(bounds)]
+        per_file = 0
         if cluster:
             # maxRecordsPerFile splits each sorted bucket into several
             # files so the sort actually yields DISJOINT per-file ranges
@@ -1742,35 +1659,10 @@ class LakeTable:
             per_file = max(
                 -(-rows_est // (n_buckets * max(files_per_bucket, 1))), 1
             )
-            writer = (
-                df.repartition(n_buckets, "_bucket")
-                .sortWithinPartitions("_bucket", *cluster)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", per_file)
-            )
-        else:
-            writer = (
-                df.repartition(n_buckets, "_bucket")
-                .write.mode("overwrite")
-            )
-        writer.partitionBy("_bucket").parquet(
-            os.path.join(self.path, data_rel)
+        meta["buckets"], meta["deltas"], meta["delta_bytes"] = {}, {}, {}
+        data_rel = self._write_rel(
+            meta, df, range(n_buckets), cluster=cluster, max_records=per_file
         )
-        meta["buckets"] = {
-            str(b): data_rel for b in self._present_buckets(data_rel)
-        }
-        meta["deltas"] = {}
-        meta["delta_bytes"] = {}
-        meta["stats"] = {
-            data_rel: file_stats.collect_rel_stats(
-                self.spark, self.path, data_rel
-            )
-        }
-        file_stats.attach_blooms(
-            self.spark, self.path, data_rel, keys, meta["stats"][data_rel],
-            level="base",
-        )
-        meta["version"] = version
         if mutate_meta is not None:
             mutate_meta(meta)
         meta["ts"] = time.time()
@@ -1794,39 +1686,48 @@ class LakeTable:
         self,
         u: DataFrame,
         meta: dict,
-        affected: list[int],
-        cast_types: bool,
-        n_unanchored: int | None,
-        unanchored_buckets: list[int] | None,
+        buckets: list[int],
+        unanchored: list[int] | None,
     ) -> DataFrame:
-        """The merge-on-read delta rows for `u` (see _merge_delta for the
-        anchored/unanchored split semantics). Extracted so _merge_hybrid
-        can delta-append a SUBSET of the affected buckets."""
+        """The merge-on-read delta rows for `u` over `buckets`.
+
+        ANCHORED rows (the fold proved their image definitive: a reset —
+        INSERT / complete UPDATE / DELETE — anchors it) append directly,
+        with NO table-state read: the read side resolves per-key latest by
+        position anyway, so a stale or redundant delta row can never win.
+        This is the Hudi-MOR insert path, and it makes micro-batch ingest
+        cost O(batch), not O(touched-bucket state) per epoch — at a
+        full-row-image source (the MariaDB default) EVERY row is anchored
+        and the state read disappears entirely.
+
+        UNANCHORED rows (patch-only histories under binlog_row_image=
+        minimal) must resolve against current state so their delta row is a
+        complete image; that join reads ONLY `unanchored` (the buckets
+        holding such rows) and semi-joins the scan down to their keys.
+        `unanchored=None` means the fold emits no `anchored` flag
+        (hand-built frames): every row resolves against `buckets` —
+        slower, never wrong.
+
+        Bytes written stay proportional to the batch, not the touched
+        buckets (tools/probe_write_amp.py measures it).
+        """
         keys = meta["keys"]
         logical = meta["schema"]
-        has_anchor = "anchored" in u.columns and n_unanchored is not None
-
-        if has_anchor:
-            unanchored_cond = (~F.col("anchored")) & (
-                F.col("final_op") != F.lit("DELETE")
-            )
-            direct = u.where(~unanchored_cond)
-            patchy = u.where(unanchored_cond) if n_unanchored else None
+        if unanchored is None:
+            direct, patchy, scan = None, u, buckets
         else:
-            direct, patchy = None, u
+            direct = u.where(~_unanchored())
+            patchy = u.where(_unanchored()) if unanchored else None
+            scan = unanchored
 
         parts: list[DataFrame] = []
         if direct is not None:
-            parts.append(self._rows_from_fold(direct, logical, keys, cast_types))
+            parts.append(self._rows_from_fold(direct, meta))
         if patchy is not None:
-            scan_buckets = (
-                unanchored_buckets if has_anchor and unanchored_buckets
-                is not None else affected
-            )
-            cur = self._read_state(meta, scan_buckets)
-            if has_anchor:
-                # the patchy key set is small (n_unanchored rows) — shrink
-                # the state side before the resolve join
+            cur = self._read_state(meta, scan)
+            if unanchored is not None:
+                # the patchy key set is small (unanchored rows only) —
+                # shrink the state side before the resolve join
                 cur = cur.join(
                     F.broadcast(patchy.select(*keys)), keys, "left_semi"
                 )
@@ -1852,9 +1753,7 @@ class LakeTable:
             out_cols = []
             for n, st in logical:
                 typ = _parse_type(st)
-                img_val = F.col("u.image").getItem(n)
-                if cast_types:
-                    img_val = img_val.cast(typ)
+                img_val = F.col("u.image").getItem(n).cast(typ)
                 if n in keys:
                     out_cols.append(F.col(f"u.{n}").cast(typ).alias(n))
                 else:
@@ -1886,239 +1785,7 @@ class LakeTable:
                 ]
             )
             parts.append(joined.where(take).select(*out_cols))
-
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-
-        return delta
-
-    def _merge_hybrid(
-        self,
-        u: DataFrame,
-        meta: dict,
-        affected: list[int],
-        compact_due: list[int],
-        version: int,
-        n_upserts: int,
-        *,
-        stream_id: str,
-        batch_id: int | None,
-        lineage: dict | None,
-        cast_types: bool,
-        base_meta: dict | None = None,
-        n_unanchored: int | None = None,
-        unanchored_buckets: list[int] | None = None,
-    ) -> dict:
-        """Partial compaction: COW-rewrite only `compact_due` (the buckets
-        whose delta debt crossed the threshold), delta-append everything
-        else, ONE atomic commit. The scale rationale: need_compact used to
-        flip the WHOLE batch to copy-on-write, so one hot bucket's debt
-        forced a rewrite of every affected bucket's state — at production
-        skew that's rewriting the table to pay one bucket's bill. Write
-        cost here is O(compact_due state + batch), the asymptote a
-        per-bucket compaction policy is supposed to have. Readers are
-        atomic: both data dirs land before the single CAS pointer swing,
-        and a conflict loser removes both."""
-        keys, n_buckets = meta["keys"], meta["n_buckets"]
-        cset = set(compact_due)
-        dset = [b for b in affected if b not in cset]
-        in_c = F.col("_bucket").isin([int(b) for b in cset])
-        u_cow = u.where(in_c)
-        u_delta = u.where(~in_c)
-
-        merged = self._cow_frame(u_cow, meta, compact_due, cast_types)
-        rel_cow = f"data/v{version}-{uuid.uuid4().hex[:8]}"
-        (
-            merged.withColumn("_bucket", _bucket_col(keys, n_buckets))
-            .repartition(max(len(compact_due), 1), "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(os.path.join(self.path, rel_cow))
-        )
-
-        del_unanch = (
-            [b for b in unanchored_buckets if b not in cset]
-            if unanchored_buckets is not None
-            else None
-        )
-        delta = self._delta_frame(
-            u_delta, meta, dset, cast_types, n_unanchored, del_unanch
-        )
-        rel_delta = f"data/d{version}-{uuid.uuid4().hex[:8]}"
-        (
-            delta.withColumn("_bucket", _bucket_col(keys, n_buckets))
-            .repartition(max(len(dset), 1), "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(os.path.join(self.path, rel_delta))
-        )
-        u.unpersist()
-
-        written_cow = set(self._present_buckets(rel_cow))
-        for b in compact_due:
-            if b in written_cow:
-                meta["buckets"][str(b)] = rel_cow
-            else:
-                meta["buckets"].pop(str(b), None)
-            # the rewrite folded this bucket's deltas into the new base
-            meta.setdefault("deltas", {}).pop(str(b), None)
-            meta.setdefault("delta_bytes", {}).pop(str(b), None)
-        if written_cow:
-            meta.setdefault("stats", {})[rel_cow] = (
-                file_stats.collect_rel_stats(self.spark, self.path, rel_cow)
-            )
-            file_stats.attach_blooms(
-                self.spark, self.path, rel_cow, keys,
-                meta["stats"][rel_cow], level="base",
-            )
-
-        written_deltas = self._present_buckets(rel_delta)
-        for b in written_deltas:
-            meta.setdefault("deltas", {}).setdefault(str(b), []).append(
-                rel_delta
-            )
-            meta.setdefault("delta_bytes", {})[str(b)] = meta[
-                "delta_bytes"
-            ].get(str(b), 0) + _dir_bytes(
-                os.path.join(self.path, rel_delta, f"_bucket={b}")
-            )
-        if written_deltas:
-            meta.setdefault("stats", {})[rel_delta] = (
-                file_stats.collect_rel_stats(self.spark, self.path, rel_delta)
-            )
-            file_stats.attach_blooms(
-                self.spark, self.path, rel_delta, keys,
-                meta["stats"][rel_delta],
-            )
-        file_stats.gc_stats(meta)
-
-        if batch_id is not None:
-            meta["committed"][stream_id] = batch_id
-        if lineage:
-            for sid, posinfo in lineage.items():
-                cur = meta["lineage"].get(str(sid))
-                if cur is None or (posinfo["file"], posinfo["pos"]) >= (
-                    cur["file"],
-                    cur["pos"],
-                ):
-                    meta["lineage"][str(sid)] = posinfo
-        meta["metrics"]["n_rows"] = (
-            meta["metrics"].get("n_rows", 0) + n_upserts
-        )
-        if base_meta is None:
-            meta["version"] = version
-            meta["ts"] = time.time()
-            self._write_metadata(meta)
-        else:
-            version = self._commit_optimistic(
-                meta, base_meta, affected, [rel_cow, rel_delta]
-            )
-        return {
-            "skipped": False,
-            "version": version,
-            "buckets": len(affected),
-            "mode": "hybrid",
-            "compacted_buckets": len(compact_due),
-        }
-
-    def _merge_delta(
-        self,
-        u: DataFrame,
-        meta: dict,
-        affected: list[int],
-        version: int,
-        n_upserts: int,
-        *,
-        stream_id: str,
-        batch_id: int | None,
-        lineage: dict | None,
-        cast_types: bool,
-        base_meta: dict | None = None,
-        n_unanchored: int | None = None,
-        unanchored_buckets: list[int] | None = None,
-    ) -> dict:
-        """MERGE as a per-bucket DELTA append (merge-on-read write path).
-
-        ANCHORED rows (the fold proved their image definitive: a reset —
-        INSERT / complete UPDATE / DELETE — anchors it) append directly,
-        with NO table-state read: the read side resolves per-key latest by
-        position anyway, so a stale or redundant delta row can never win.
-        This is the Hudi-MOR insert path, and it makes micro-batch ingest
-        cost O(batch), not O(touched-bucket state) per epoch — at a
-        full-row-image source (the MariaDB default) EVERY row is anchored
-        and the state read disappears entirely.
-
-        UNANCHORED rows (patch-only histories under binlog_row_image=
-        minimal) must resolve against current state so their delta row is a
-        complete image; that join reads ONLY the unanchored rows' buckets
-        and semi-joins the scan down to their keys. Folds that don't emit
-        the `anchored` flag (hand-built frames) resolve everything —
-        slower, never wrong.
-
-        Bytes written stay proportional to the batch, not the touched
-        buckets (tools/probe_write_amp.py measures it).
-        """
-        keys, n_buckets = meta["keys"], meta["n_buckets"]
-        delta = self._delta_frame(
-            u, meta, affected, cast_types, n_unanchored, unanchored_buckets
-        )
-
-        data_rel = f"data/d{version}-{uuid.uuid4().hex[:8]}"
-        (
-            delta.withColumn("_bucket", _bucket_col(keys, n_buckets))
-            .repartition(max(len(affected), 1), "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(os.path.join(self.path, data_rel))
-        )
-        u.unpersist()
-
-        written_deltas = self._present_buckets(data_rel)
-        for b in written_deltas:
-            meta.setdefault("deltas", {}).setdefault(str(b), []).append(
-                data_rel
-            )
-            meta.setdefault("delta_bytes", {})[str(b)] = meta[
-                "delta_bytes"
-            ].get(str(b), 0) + _dir_bytes(
-                os.path.join(self.path, data_rel, f"_bucket={b}")
-            )
-        if written_deltas:
-            meta.setdefault("stats", {})[data_rel] = (
-                file_stats.collect_rel_stats(self.spark, self.path, data_rel)
-            )
-            file_stats.attach_blooms(
-                self.spark, self.path, data_rel, keys,
-                meta["stats"][data_rel],
-            )
-        if batch_id is not None:
-            meta["committed"][stream_id] = batch_id
-        if lineage:
-            for sid, posinfo in lineage.items():
-                cur_pos = meta["lineage"].get(str(sid))
-                if cur_pos is None or (posinfo["file"], posinfo["pos"]) >= (
-                    cur_pos["file"],
-                    cur_pos["pos"],
-                ):
-                    meta["lineage"][str(sid)] = posinfo
-        meta["metrics"]["n_rows"] = (
-            meta["metrics"].get("n_rows", 0) + n_upserts
-        )
-        if base_meta is None:
-            meta["version"] = version
-            meta["ts"] = time.time()
-            self._write_metadata(meta)
-        else:
-            version = self._commit_optimistic(
-                meta, base_meta, affected, [data_rel]
-            )
-        return {
-            "skipped": False,
-            "version": version,
-            "buckets": len(affected),
-            "mode": "delta",
-        }
+        return _union(parts)
 
     # ------------------------------------------------------------ maintenance
     def lineage(self) -> dict:
@@ -2143,6 +1810,17 @@ def _latest_per_key(df: DataFrame, keys: list[str]) -> DataFrame:
         .agg(F.max_by(F.struct(*[F.col(c) for c in cols]), pos).alias("_r"))
         .select(*[F.col(f"_r.{c}").alias(c) for c in cols])
     )
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def _unanchored() -> F.Column:
+    """Fold rows whose image is a patch over prior state (not anchored by
+    a reset) and that still need a live row — the rows a delta append
+    must resolve against table state."""
+    return (~F.col("anchored")) & (F.col("final_op") != F.lit("DELETE"))
 
 
 def _dir_bytes(path: str) -> int:

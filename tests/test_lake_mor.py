@@ -4,6 +4,7 @@ deltas back into the base."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -417,3 +418,153 @@ def test_hybrid_merge_trips_on_byte_ratio_and_preserves_state(spark, tmp_path):
     )
     assert res2.get("skipped") is True
     assert {r["id"]: r["val"] for r in table.read().collect()}["k1"] == "slim"
+
+
+def _buckets_of(spark, table, keys):
+    from mariadb_cdc_spark.sources.lake import _bucket_col
+
+    meta = table.metadata()
+    rows = (
+        spark.createDataFrame([(k,) for k in keys], "id string")
+        .select("id", _bucket_col(meta["keys"], meta["n_buckets"]).alias("b"))
+        .collect()
+    )
+    return {r["id"]: r["b"] for r in rows}
+
+
+@pytest.mark.parametrize("mode", ["fast", "delta", "hybrid", "cow"])
+def test_each_merge_path_reports_mode_and_state(spark, tmp_path, mode):
+    """Every write path reports its `mode` and lands the per-key state."""
+    path = str(tmp_path / mode)
+    if mode == "fast":
+        table = LakeTable.create(spark, path, SCHEMA, ["id"], n_buckets=4)
+        expected = {}
+        batch = [(f"k{i}", "UPSERT", {"id": f"k{i}", "val": f"v{i}"}, 100 + i)
+                 for i in range(20)]
+    else:
+        table = _init(spark, path, n=20, n_buckets=4)
+        expected = {f"k{i}": f"v{i}" for i in range(20)}
+    if mode == "delta":  # 2 rows <= MOR_MAX_ROW_FRACTION of 20
+        batch = [("k3", "UPSERT", {"val": "v3b"}, 41_000),
+                 ("k7", "DELETE", {}, 41_001)]
+    elif mode == "cow":  # 7 rows > MOR_MAX_ROW_FRACTION of 20
+        batch = [(f"k{i}", "UPSERT", {"val": f"w{i}"}, 41_000 + i)
+                 for i in range(6)] + [("k19", "DELETE", {}, 42_000)]
+    elif mode == "hybrid":
+        # one fat delta puts k1's bucket over COMPACT_BYTES_FRACTION
+        table.merge(
+            _folded(spark, [("k1", "UPSERT", {"val": "x" * 200_000}, 40_000)]),
+            stream_id="init", batch_id=1,
+        )
+        expected["k1"] = "x" * 200_000
+        b = _buckets_of(spark, table, list(expected))
+        other = next(k for k in expected if b[k] != b["k1"])
+        batch = [("k1", "UPSERT", {"val": "slim"}, 41_000),
+                 (other, "DELETE", {}, 41_001)]
+    res = table.merge(_folded(spark, batch), stream_id="init", batch_id=2)
+    assert res["mode"] == mode, res
+    for rid, op, img, _ in batch:
+        if op == "DELETE":
+            expected.pop(rid, None)
+        else:
+            expected[rid] = img["val"]
+    assert {r["id"]: r["val"] for r in table.read().collect()} == expected
+
+
+def _scan_relations(df) -> int:
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return sum(
+        1 for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRelation"
+    )
+
+
+def test_read_scans_each_data_relation_once(spark, tmp_path):
+    """A 4-bucket table with 3 delta appends over every bucket: read()
+    plans one scan per data relation (1 base + 3 deltas), not one per
+    (bucket x delta relation) plus the base."""
+    table = _init(spark, str(tmp_path / "t"), n=40, n_buckets=4)
+    table.COMPACT_BYTES_FRACTION = 1e9  # keep every append a delta
+    b = _buckets_of(spark, table, [f"k{i}" for i in range(40)])
+    one_per_bucket = sorted({b[k]: k for k in b}.values())
+    assert len(one_per_bucket) == 4
+    expected = {f"k{i}": f"v{i}" for i in range(40)}
+    for rev in range(3):
+        res = table.merge(
+            _folded(spark, [(k, "UPSERT", {"val": f"{k}-r{rev}"},
+                             50_000 + 10 * rev + j)
+                            for j, k in enumerate(one_per_bucket)]),
+            stream_id="init", batch_id=1 + rev,
+        )
+        assert res["mode"] == "delta"
+        expected.update({k: f"{k}-r{rev}" for k in one_per_bucket})
+    meta = table.metadata()
+    assert all(len(meta["deltas"][str(i)]) == 3 for i in range(4))
+    df = table.read()
+    assert _scan_relations(df) == 4
+    assert {r["id"]: r["val"] for r in df.collect()} == expected
+
+
+def test_read_where_keeps_columns_across_relations(spark, tmp_path):
+    """Clean buckets living in different relations (one written before an
+    add-column, one rewritten after it) are scanned per relation, so
+    read_where keeps the newer relation's column values."""
+    table = _init(spark, str(tmp_path / "t"), n=20, n_buckets=4)
+    table.add_column("extra")
+    b = _buckets_of(spark, table, [f"k{i}" for i in range(20)])
+    hit = sorted(k for k in b if b[k] in (0, 1))
+    # > MOR_MAX_ROW_FRACTION of the rows: COW rewrites buckets 0-1 only
+    assert len(hit) > 4 and len(hit) < 20
+    table.merge(
+        _folded(spark, [(k, "UPSERT", {"val": f"v{k[1:]}", "extra": "x"},
+                         60_000 + j) for j, k in enumerate(hit)]),
+        stream_id="init", batch_id=1,
+    )
+    meta = table.metadata()
+    assert meta["buckets"]["0"] != meta["buckets"]["2"]
+    assert not any(meta["deltas"].values())
+    full = {r["id"]: r["extra"] for r in table.read().collect()}
+    assert {k for k, v in full.items() if v == "x"} == set(hit)
+    got = table.read_where([("val", "prefix", "v")]).collect()
+    assert {r["id"]: r["extra"] for r in got} == full
+
+
+def test_hybrid_delta_side_skips_state_read_for_cow_only_patches(
+    spark, tmp_path
+):
+    """A hybrid batch whose only unanchored (patch-only) row lands in the
+    compaction-due bucket reads table state once, for the COW side: the
+    delta side has no row to resolve."""
+    table = _init(spark, str(tmp_path / "t"), n=60, n_buckets=4)
+    table.merge(
+        _folded(spark, [("k1", "UPSERT", {"val": "x" * 200_000}, 40_000)]),
+        stream_id="init", batch_id=1,
+    )
+    b = _buckets_of(spark, table, [f"k{i}" for i in range(60)])
+    other = next(k for k in sorted(b) if b[k] != b["k1"])
+    batch = spark.createDataFrame(
+        [("k1", "UPSERT", {"val": "patched"}, "bin.000001", 41_000, 0, 1,
+          False),
+         (other, "UPSERT", {"id": other, "val": "ride"}, "bin.000001",
+          41_001, 0, 1, True)],
+        "id string, final_op string, image map<string,string>,"
+        " last_file string, last_pos long, last_row_idx int,"
+        " n_changes long, anchored boolean",
+    )
+    calls = []
+    orig = table._read_state
+
+    def counting(meta, buckets):
+        calls.append(list(buckets))
+        return orig(meta, buckets)
+
+    table._read_state = counting
+    try:
+        res = table.merge(batch, stream_id="init", batch_id=2)
+    finally:
+        table._read_state = orig
+    assert res["mode"] == "hybrid", res
+    assert calls == [[b["k1"]]]
+    rows = {r["id"]: r["val"] for r in table.read().collect()}
+    assert rows["k1"] == "patched" and rows[other] == "ride"
+    assert len(rows) == 60
